@@ -34,6 +34,11 @@ class Context:
     started: float
     measure_start: float | None = None
     measure_cpu: tuple[int, int] = (0, 0)
+    # seconds from process start to the end of each named set-up step
+    phases: dict = field(default_factory=dict)
+
+    def mark(self, step: str) -> None:
+        self.phases[step] = time.time() - self.started
 
     def begin_measuring(self) -> None:
         """Mark the first measured operation; everything before it is

@@ -4,10 +4,11 @@ frames with Zipf-hot wallets, collections and name words.
 
 One client, closed loop: whole rounds of a fixed 8-endpoint mix in a seeded
 order per round, four point lookups and four scan/aggregate calls. Each call
-is timed from the endpoint method call to the end of ``collect()``. The
-first round is set-up. Every measured call must equal the same endpoint built
-over the raw, unbucketed frames, computed once per distinct call after the
-measured rounds.
+is timed from the endpoint method call to the end of ``collect()``.
+
+Set-up ends with the reference round: every endpoint once over the raw,
+unbucketed frames. It warms the session for the same endpoint code, and its
+rows are what every measured call must return.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from collections import Counter, defaultdict
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from e2ebench import gen, harness
 
@@ -35,22 +36,36 @@ ENDPOINTS = POINT + SCAN
 
 def measured_rounds(seconds: int) -> int:
     """A fixed round count for a run of ``seconds`` (a warm round takes
-    about 7-9 s on 4 cores)."""
-    return max(2, round(seconds / 8))
+    about 6-8 s on 4 cores), at least two."""
+    return max(2, round(seconds / 10))
 
 
-def _wallets(ix: np.ndarray) -> np.ndarray:
-    return np.where(ix < 0, None, np.char.mod("0x%040x", np.maximum(ix, 0)).astype(object))
+def _wallets(ix: np.ndarray) -> list:
+    return [None if i < 0 else gen.wallet(i) for i in ix.tolist()]
 
 
-def _frame(spark, path: str, cols: dict, schema, shape) -> DataFrame:
-    """Flat numpy columns go to parquet through Arrow; ``shape`` builds the
-    nested API columns, cast to the exact schema, and the result is written
-    once as plain parquet and read back."""
-    pq.write_table(pa.table(cols), path + ".flat")
-    df = shape(spark.read.parquet(path + ".flat"))
-    df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields]).write.parquet(path)
-    return spark.read.parquet(path)
+def _write(spark, path: str, schema, cols: dict) -> DataFrame:
+    """Write ``cols`` as parquet in the exact API ``schema`` with Arrow
+    alone, so building the inputs runs no Spark job, and read it back with
+    that schema. A schema field missing from ``cols`` is all null."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    n = len(next(iter(cols.values())))
+
+    def column(f: pa.Field) -> pa.Array:
+        v = cols.get(f.name, [None] * n)
+        return pa.array(v.tolist() if isinstance(v, np.ndarray) else v, type=f.type)
+
+    pq.write_table(pa.Table.from_arrays([column(f) for f in arrow], schema=arrow), path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _creator(owners: list) -> list[dict]:
+    return [
+        {"did": None if w is None else "did:elastos:" + w[2:10], "name": "creator", "description": None}
+        for w in owners
+    ]
 
 
 def entity_frames(
@@ -65,119 +80,89 @@ def entity_frames(
     g = gen.nft_frames(seed, n_tokens, n_wallets, n_collections)
     t, o, oe, te, c = (g[k] for k in ("tokens", "orders", "order_events", "token_events", "collections"))
     unique_key = np.array([f"{a}-{b}-{c}" for a, b, c in zip(t["chain"], t["contract"], t["tokenId"])])
-    tokens = _frame(
-        spark, os.path.join(out_dir, "tokens.parquet"),
+    minter, fee = _wallets(t["minter"]), t["royaltyFee"]
+    tokens = _write(
+        spark, os.path.join(out_dir, "tokens.parquet"), S.TOKENS_SCHEMA,
         {
-            "tokenId": t["tokenId"], "chain": t["chain"], "contract": t["contract"],
-            "uniqueKey": unique_key, "tokenOwner": _wallets(t["owner"]),
-            "royaltyOwner": _wallets(t["minter"]), "royaltyFee": t["royaltyFee"],
-            "createTime": t["createTime"], "blockNumber": t["blockNumber"],
-            "name": t["name"], "adult": t["adult"],
+            "tokenId": t["tokenId"], "tokenIdHex": np.char.mod("0x%X", t["tokenId"].astype(np.int64)),
+            "chain": t["chain"], "contract": t["contract"], "uniqueKey": unique_key,
+            "tokenSupply": np.ones(n_tokens, dtype=np.int64), "tokenOwner": _wallets(t["owner"]),
+            "tokenUri": np.char.add("ipfs://token/", t["tokenId"]),
+            "royaltyOwner": minter, "royaltyFee": fee, "tokenMinter": minter,
+            "createTime": t["createTime"], "updateTime": t["createTime"], "blockNumber": t["blockNumber"],
+            "version": np.full(n_tokens, 2), "type": ["image"] * n_tokens, "name": t["name"],
+            "description": np.char.add(np.char.add("a ", t["name"]), " token"),
+            "creator": _creator(minter),
+            "data": [
+                {"image": f"ipfs://img/{i}", "kind": "png", "size": int(f) * 7, "thumbnail": None, "signature": None}
+                for i, f in zip(t["tokenId"].tolist(), fee.tolist())
+            ],
+            "adult": t["adult"],
+            "properties": [[("edition", "1")]] * n_tokens,
+            "attributes": [[("rarity", str(f % 5))] for f in fee.tolist()],
+            "notGetDetail": np.zeros(n_tokens, dtype=bool), "retryTimes": np.zeros(n_tokens, dtype=np.int32),
         },
-        S.TOKENS_SCHEMA,
-        lambda df: df.select(
-            "*",
-            F.concat(F.lit("0x"), F.hex(F.col("tokenId").cast("long"))).alias("tokenIdHex"),
-            F.lit(1).alias("tokenSupply"),
-            F.concat(F.lit("ipfs://token/"), "tokenId").alias("tokenUri"),
-            F.col("royaltyOwner").alias("tokenMinter"),
-            F.col("createTime").alias("updateTime"),
-            F.lit(2).alias("version"),
-            F.lit("image").alias("type"),
-            F.concat(F.lit("a "), "name", F.lit(" token")).alias("description"),
-            F.struct(
-                F.concat(F.lit("did:elastos:"), F.substring("royaltyOwner", 3, 8)).alias("did"),
-                F.lit("creator").alias("name"), F.lit(None).cast("string").alias("description"),
-            ).alias("creator"),
-            F.struct(
-                F.concat(F.lit("ipfs://img/"), "tokenId").alias("image"), F.lit("png").alias("kind"),
-                (F.col("royaltyFee") * 7).alias("size"), F.lit(None).cast("string").alias("thumbnail"),
-                F.lit(None).cast("string").alias("signature"),
-            ).alias("data"),
-            F.create_map(F.lit("edition"), F.lit("1")).alias("properties"),
-            F.create_map(F.lit("rarity"), (F.col("royaltyFee") % 5).cast("string")).alias("attributes"),
-            F.lit(False).alias("notGetDetail"),
-            F.lit(0).alias("retryTimes"),
-        ),
     )
     tok = o["tok"]
-    state, bids = o["orderState"], o["bids"]
+    state, bids, price = o["orderState"], o["bids"], o["price"].tolist()
+    n_orders = len(tok)
     # a tenth of the listings sit on the legacy v1 market
     chain = np.where(o["orderId"] % 10 == 0, "v1", t["chain"][tok])
-    orders = _frame(
-        spark, os.path.join(out_dir, "orders.parquet"),
+    buyer = _wallets(o["buyer"])
+    orders = _write(
+        spark, os.path.join(out_dir, "orders.parquet"), S.ORDERS_SCHEMA,
         {
-            "orderId": o["orderId"], "chain": chain, "baseToken": t["contract"][tok],
-            "tokenId": t["tokenId"][tok], "uniqueKey": unique_key[tok],
-            "orderType": o["orderType"], "orderState": state,
-            "price": o["price"].astype(str),
-            "filled": np.where(state == 2, o["price"].astype(str), None),
-            "lastBid": np.where(bids > 0, (o["price"] + o["price"] // 10).astype(str), None),
-            "createTime": o["createTime"], "endTime": o["endTime"],
-            "sellerAddr": _wallets(o["seller"]), "buyerAddr": _wallets(o["buyer"]),
-            "bids": bids, "blockNumber": o["blockNumber"], "royaltyFee": t["royaltyFee"][tok],
-            "minter": _wallets(t["minter"][tok]),
+            "orderId": o["orderId"], "chain": chain, "contract": [MARKET] * n_orders,
+            "baseToken": t["contract"][tok], "tokenId": t["tokenId"][tok], "uniqueKey": unique_key[tok],
+            "orderType": o["orderType"], "orderState": state, "amount": np.ones(n_orders, dtype=np.int64),
+            "quoteToken": [QUOTE] * n_orders, "price": price,
+            "filled": [p if s == 2 else None for p, s in zip(price, state.tolist())],
+            "lastBid": [p + p // 10 if b > 0 else None for p, b in zip(price, bids.tolist())],
+            "startTime": o["createTime"], "endTime": o["endTime"],
+            "createTime": o["createTime"], "updateTime": o["createTime"],
+            "sellerAddr": _wallets(o["seller"]), "buyerAddr": buyer,
+            "lastBidder": [w if b > 0 else None for w, b in zip(buyer, bids.tolist())],
+            "bids": bids, "royaltyOwners": [[minter[k]] for k in tok.tolist()],
+            "royaltyFees": [[f] for f in fee[tok].tolist()],
+            "platformFee": np.full(n_orders, 25_000), "isBlindBox": np.zeros(n_orders, dtype=bool),
         },
-        S.ORDERS_SCHEMA,
-        lambda df: df.select(
-            "*",
-            F.lit(MARKET).alias("contract"), F.lit(1).alias("amount"), F.lit(QUOTE).alias("quoteToken"),
-            F.lit(None).alias("buyoutPrice"), F.lit(None).alias("reservePrice"),
-            F.col("createTime").alias("startTime"), F.col("createTime").alias("updateTime"),
-            F.when(F.col("bids") > 0, F.col("buyerAddr")).alias("lastBidder"),
-            F.array("minter").alias("royaltyOwners"), F.array("royaltyFee").alias("royaltyFees"),
-            F.lit(25_000).alias("platformFee"), F.lit(False).alias("isBlindBox"),
-        ),
     )
     oi = oe["order"]
-    order_events = _frame(
-        spark, os.path.join(out_dir, "order_events.parquet"),
+    order_events = _write(
+        spark, os.path.join(out_dir, "order_events.parquet"), S.ORDER_EVENTS_SCHEMA,
         {
             "chain": chain[oi], "baseToken": t["contract"][tok[oi]], "blockNumber": oe["blockNumber"],
             "transactionHash": np.char.mod("0x%064x", np.arange(len(oi))),
             "orderId": o["orderId"][oi], "tokenId": t["tokenId"][tok[oi]],
             "seller": _wallets(o["seller"][oi]), "buyer": _wallets(oe["buyer"]),
-            "price": oe["price"].astype(str), "eventType": oe["eventType"],
+            "quoteToken": [QUOTE] * len(oi), "price": oe["price"].tolist(), "eventType": oe["eventType"],
             "gasFee": oe["gasFee"], "timestamp": oe["timestamp"],
         },
-        S.ORDER_EVENTS_SCHEMA,
-        lambda df: df.withColumn("quoteToken", F.lit(QUOTE)),
     )
     ti = te["tok"]
-    token_events = _frame(
-        spark, os.path.join(out_dir, "token_events.parquet"),
+    token_events = _write(
+        spark, os.path.join(out_dir, "token_events.parquet"), S.TOKEN_EVENTS_SCHEMA,
         {
             "chain": t["chain"][ti], "contract": t["contract"][ti], "blockNumber": te["blockNumber"],
             "transactionHash": np.char.mod("0x%064x", np.arange(len(ti)) + len(oi)),
-            "from": np.where(te["from"] < 0, gen.BURN, _wallets(te["from"])),
+            "from": [gen.BURN if w is None else w for w in _wallets(te["from"])],
             "to": _wallets(te["to"]), "tokenId": t["tokenId"][ti],
-            "gasFee": te["gasFee"], "timestamp": te["timestamp"],
+            "value": np.ones(len(ti), dtype=np.int64), "gasFee": te["gasFee"], "timestamp": te["timestamp"],
         },
-        S.TOKEN_EVENTS_SCHEMA,
-        lambda df: df.select("*", F.lit(None).alias("operator"), F.lit(1).alias("value")),
     )
-    collections = _frame(
-        spark, os.path.join(out_dir, "collections.parquet"),
+    owners = _wallets(c["owner"])
+    collections = _write(
+        spark, os.path.join(out_dir, "collections.parquet"), S.COLLECTIONS_SCHEMA,
         {
-            "chain": c["chain"], "token": c["token"], "owner": _wallets(c["owner"]),
-            "name": c["name"], "category": c["category"], "dia": c["dia"],
+            "chain": c["chain"], "token": c["token"], "owner": owners, "name": c["name"],
+            "uri": np.char.add("ipfs://coll/", c["token"]), "version": np.ones(len(owners), dtype=np.int32),
+            "creator": _creator(owners),
+            "data": [
+                {"avatar": None, "background": None, "description": "the " + n, "category": k, "social": {}}
+                for n, k in zip(c["name"].tolist(), c["category"].tolist())
+            ],
+            "dia": c["dia"],
         },
-        S.COLLECTIONS_SCHEMA,
-        lambda df: df.select(
-            "*",
-            F.concat(F.lit("ipfs://coll/"), "token").alias("uri"), F.lit(1).alias("version"),
-            F.struct(
-                F.concat(F.lit("did:elastos:"), F.substring("owner", 3, 8)).alias("did"),
-                F.lit("creator").alias("name"), F.lit(None).cast("string").alias("description"),
-            ).alias("creator"),
-            F.struct(
-                F.lit(None).cast("string").alias("avatar"), F.lit(None).cast("string").alias("background"),
-                F.concat(F.lit("the "), "name").alias("description"), F.col("category"),
-                F.struct(*[F.lit(None).cast("string").alias(k) for k in (
-                    "website", "profile", "feeds", "twitter", "telegram", "discord", "medium"
-                )]).alias("social"),
-            ).alias("data"),
-        ),
     )
     return {
         "tokens": tokens, "orders": orders, "order_events": order_events,
@@ -223,17 +208,21 @@ def canonical(rows) -> list[str]:
     return sorted(repr(r) for r in rows)
 
 
-def check_calls(plain, results) -> tuple[int, int]:
-    """(calls whose rows differ from the same endpoint on ``plain``, the
-    raw-frame service, as multisets; distinct calls checked). Each distinct
-    (endpoint, args) is computed on ``plain`` once."""
-    expected, mismatched = {}, 0
-    for endpoint, args, rows in results:
+def reference(plain, calls) -> dict[tuple, list[str]]:
+    """Canonical rows of each distinct (endpoint, args) in ``calls``,
+    computed once on ``plain``, the service over the raw frames."""
+    out = {}
+    for endpoint, args in calls:
         key = (endpoint, repr(args))
-        if key not in expected:
-            expected[key] = canonical(getattr(plain, endpoint)(*args).collect())
-        mismatched += canonical(rows) != expected[key]
-    return mismatched, len(expected)
+        if key not in out:
+            out[key] = canonical(getattr(plain, endpoint)(*args).collect())
+    return out
+
+
+def check_calls(expected: dict, results) -> int:
+    """Calls in ``results`` whose rows differ, as multisets, from the
+    ``reference`` rows of the same endpoint and arguments."""
+    return sum(canonical(rows) != expected[(e, repr(args))] for e, args, rows in results)
 
 
 def run(ctx: harness.Context) -> harness.Result:
@@ -242,11 +231,13 @@ def run(ctx: harness.Context) -> harness.Result:
 
     spark, tracer = ctx.spark, ctx.tracer
     frames = entity_frames(spark, ctx.seed, os.path.join(ctx.scratch, "raw"))
+    ctx.mark("inputs")
     dims = {k: frames[k] for k in ("token_events", "order_events", "collections")}
     prepare_entity_silver(spark, frames["tokens"], frames["orders"])
     svc = PasarQueryService.from_lake(spark, frames["tokens"], frames["orders"], **dims)
+    ctx.mark("silver")
     n_rounds = measured_rounds(ctx.seconds)
-    plan = call_plan(frames["_gen"], ctx.seed, 1 + n_rounds)
+    plan = call_plan(frames["_gen"], ctx.seed, n_rounds)
     sc = spark.sparkContext
 
     def call(endpoint: str, args: tuple, i: int):
@@ -263,12 +254,12 @@ def run(ctx: harness.Context) -> harness.Result:
                 rec["attrs"].update(harness.plan_phases_ms(df))
         return rows, elapsed
 
-    for endpoint, args in plan[0]:  # set-up: the cold round
-        call(endpoint, args, -1)
+    # set-up: the reference round, which is also the warm-up
+    expected = reference(PasarQueryService(frames["tokens"], frames["orders"], **dims), plan[0])
     ctx.begin_measuring()
     times, results, failed_calls = defaultdict(list), [], 0
     i = 0
-    for rnd in plan[1:]:
+    for rnd in plan:
         for endpoint, args in rnd:
             try:
                 rows, elapsed = call(endpoint, args, i)
@@ -280,10 +271,8 @@ def run(ctx: harness.Context) -> harness.Result:
                 results.append((endpoint, args, rows))
             i += 1
     measure_end = time.time()
-    engine = _engine_per_call(spark, i) if tracer.enabled else {}
-
-    plain = PasarQueryService(frames["tokens"], frames["orders"], **dims)
-    mismatched, distinct = check_calls(plain, results)
+    engine = _engine_per_call(spark, i, n_rounds) if tracer.enabled else {}
+    mismatched = check_calls(expected, results)
 
     all_ms = [x for v in times.values() for x in v]
     per_endpoint = {e: harness.median(times[e]) for e in ENDPOINTS}
@@ -302,7 +291,7 @@ def run(ctx: harness.Context) -> harness.Result:
         samples={"calls": len(all_ms), **{f"{e}_calls": len(times[e]) for e in ENDPOINTS}},
         series={"call_ms": dict(times)},
         checks={"calls_equal_plain_frames": {"ok": mismatched == 0, "mismatched_calls": mismatched,
-                                             "distinct_calls": distinct}},
+                                             "distinct_calls": len(expected)}},
     )
     res.named.update({f"{e}_ms_p50": v for e, v in per_endpoint.items()})
     if tracer.enabled:
@@ -324,12 +313,15 @@ def run(ctx: harness.Context) -> harness.Result:
     return res
 
 
-def _engine_per_call(spark, n_calls: int) -> dict:
+def _engine_per_call(spark, n_calls: int, n_rounds: int) -> dict:
     jobs = set()
     for i in range(n_calls):
         jobs |= harness.job_ids(spark, f"call-{i}")
     counts = harness.job_counts(spark, jobs)
+    moved = harness.stage_bytes(spark, counts["stage_ids"])
     return {
         "engine.jobs_per_call": counts["jobs"] / n_calls,
         "engine.tasks_per_call": counts["tasks"] / n_calls,
+        "engine.shuffle_write_bytes_per_round": moved["shuffle_write_bytes"] / n_rounds,
+        "engine.spill_bytes_per_round": moved["spill_bytes"] / n_rounds,
     }

@@ -83,7 +83,6 @@ def main(argv=None) -> int:
     ap.add_argument("--seconds", type=int, help="default: run_seconds of BENCHMARK.json")
     ap.add_argument("--trees", nargs=2, metavar=("A", "B"), help="A/B: two checkouts, B is the change")
     ap.add_argument("--traced", action="store_true")
-    ap.add_argument("--out", help="write every result and summary to this JSON file")
     args = ap.parse_args(argv)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
@@ -98,7 +97,6 @@ def main(argv=None) -> int:
             order = trees if i % 2 == 0 else trees[::-1]
             for t in order:
                 results[t][w].append(run_once(t, w, seed, seconds, 0))
-    report = {"results": results, "summary": {}}
     for w in workloads:
         for m in spec["end_to_end"]:
             name, bound = m["name"], m["bound"]
@@ -108,16 +106,13 @@ def main(argv=None) -> int:
                 if vals:
                     cols[t] = summary(vals)
             for t, s in cols.items():
-                if name == "setup_s":
-                    flag = "(spread not gated)"
-                elif s["spread"] <= bound / 3:
+                if s["spread"] <= bound / 3:
                     flag = "ok"
                 else:
                     flag = "within bound" if s["spread"] <= bound else "TOO NOISY"
                 print(f"{w:10s} {name:18s} {os.path.basename(os.path.abspath(t)):12s} n={s['n']:2d} "
                       f"median={s['median']:.4g} q1={s['q1']:.4g} q3={s['q3']:.4g} "
                       f"spread={s['spread']:.3f} bound={bound} {flag}")
-            report["summary"][f"{w}/{name}"] = cols
             if args.trees and len(cols) == 2:
                 a, b = (cols[t] for t in trees)
                 pairs = [
@@ -134,16 +129,12 @@ def main(argv=None) -> int:
         for t in trees:
             for w in workloads:
                 out = run_once(t, w, args.seeds[0], seconds, 1)
-                rec = newest_record(t, w, args.seeds[0], 1)
-                overhead = rec.get("tracing_overhead") if rec else None
-                if out:
-                    for k, v in out["metrics"].items():
-                        print(f"{w:10s} {k:42s} {v['value']:.6g} {v['unit']}")
-                print(f"{w:10s} tracing overhead (traced - untraced, same seed): {overhead}")
-                report["summary"][f"{w}/traced"] = {"metrics": out and out["metrics"], "overhead": overhead}
-    if args.out:
-        with open(args.out, "w") as fh:
-            json.dump(report, fh, indent=1)
+                rec = newest_record(t, w, args.seeds[0], 1) if out else None
+                if rec:
+                    # the record holds every layer metric the workload measured
+                    for k, v in sorted(rec["layer"].items()):
+                        print(f"{w:10s} {k:42s} {v:.6g}")
+                    print(f"{w:10s} tracing overhead (traced - untraced, same seed): {rec['tracing_overhead']}")
     return 0
 
 

@@ -94,19 +94,20 @@ def services(spark, tmp_path_factory):
     plain = PasarQueryService(frames["tokens"], frames["orders"], **dims)
     (rnd,) = serve.call_plan(frames["_gen"], 3, 1)
     results = [(e, a, getattr(lake, e)(*a).collect()) for e, a in rnd]
-    yield plain, results
+    yield serve.reference(plain, rnd), results
     for t in ("silver_tokens", "silver_orders"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_serve_check_passes_on_correct_calls(services):
-    plain, results = services
-    assert serve.check_calls(plain, results) == (0, len(serve.ENDPOINTS))
+    expected, results = services
+    assert len(expected) == len(serve.ENDPOINTS)
+    assert serve.check_calls(expected, results) == 0
 
 
 @pytest.mark.parametrize("corrupt", ["drop_row", "alter_value"])
 def test_serve_check_red_on_corrupted_call(services, corrupt):
-    plain, results = services
+    expected, results = services
     k = next(i for i, (_, _, rows) in enumerate(results) if rows)
     endpoint, args, rows = results[k]
     if corrupt == "drop_row":
@@ -116,8 +117,7 @@ def test_serve_check_red_on_corrupted_call(services, corrupt):
         key = next(c for c, v in first.items() if v is not None)
         first[key] = "corrupted" if isinstance(first[key], str) else None
         bad = [type(rows[0])(**first)] + rows[1:]
-    mismatched, _ = serve.check_calls(plain, results[:k] + [(endpoint, args, bad)] + results[k + 1:])
-    assert mismatched == 1
+    assert serve.check_calls(expected, results[:k] + [(endpoint, args, bad)] + results[k + 1:]) == 1
 
 
 # --- analytics: every query == its DuckDB oracle ----------------------------
@@ -135,10 +135,11 @@ def test_analytics_check_passes_and_turns_red(spark, tables, name):
     from pasardassist_spark.queries import all_oracles, all_queries
 
     df, sql = all_queries()[name](spark, tables), all_oracles()[name]
-    assert analytics.check_oracle(df, sql, tables, name) == {"ok": True}
-    assert not analytics.check_oracle(df.limit(max(0, df.count() - 1)), sql, tables, name)["ok"]
+    pdf = df.toPandas()
+    assert analytics.check_oracle(pdf, sql, tables, name) == {"ok": True}
+    assert not analytics.check_oracle(pdf.iloc[:-1], sql, tables, name)["ok"]
     num = next(f.name for f in df.schema.fields if f.dataType.typeName() in ("long", "double", "decimal"))
-    assert not analytics.check_oracle(df.withColumn(num, F.col(num) + 1), sql, tables, name)["ok"]
+    assert not analytics.check_oracle(df.withColumn(num, F.col(num) + 1).toPandas(), sql, tables, name)["ok"]
 
 
 # --- a program defect the ingest set-up avoids -------------------------------

@@ -28,6 +28,7 @@ def main(argv: list[str]) -> int:
 
     spark = get_spark(f"e2ebench-{workload}")
     ctx = harness.Context(spark, harness.Tracer(trace), seed, seconds, scratch, started)
+    ctx.mark("session")
     try:
         res: harness.Result = importlib.import_module(f"e2ebench.{workload}").run(ctx)
         steal_measured = harness.steal_share(ctx.measure_cpu, harness.cpu_times())
@@ -50,6 +51,7 @@ def main(argv: list[str]) -> int:
         "engine": engine,
         "cpu_steal_share": harness.steal_share(steal0, harness.cpu_times()),
         "cpu_steal_share_measured": steal_measured,
+        "setup_phases_s": ctx.phases,
         **asdict(res),
     }
     if trace:
