@@ -294,6 +294,21 @@ def cpu_times() -> tuple[int, int]:
     return (fields[7] if len(fields) > 7 else 0), sum(fields[:8])
 
 
+def host_speed_ms(reps: int = 3) -> float:
+    """Median time of a fixed single-threaded Python loop, a probe of the
+    host's speed at that moment. On a shared host it moves by more than the
+    steal share shows: the loop took about 75 ms in a quiet hour and
+    100-150 ms in a slow one, at under 10% steal."""
+    times = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        acc = 0
+        for i in range(1_000_000):
+            acc += i * i % 7
+        times.append((time.perf_counter() - t0) * 1000.0)
+    return statistics.median(times)
+
+
 def steal_share(before: tuple[int, int], after: tuple[int, int]) -> float:
     total = after[1] - before[1]
     return (after[0] - before[0]) / total if total > 0 else 0.0

@@ -6,9 +6,11 @@ One client, closed loop: whole rounds of a fixed 8-endpoint mix in a seeded
 order per round, four point lookups and four scan/aggregate calls. Each call
 is timed from the endpoint method call to the end of ``collect()``.
 
-Set-up ends with the reference round: every endpoint once over the raw,
-unbucketed frames. It warms the session for the same endpoint code, and its
-rows are what every measured call must return.
+Set-up runs the reference round, every endpoint once over the raw,
+unbucketed frames, whose rows are what every call must return; then one
+warm round over the silver. Both warm the session for the same endpoint
+code: a call's time falls by about a third from the first silver round to
+the third. The warm round's calls are checked and counted, not timed.
 """
 
 from __future__ import annotations
@@ -32,12 +34,13 @@ QUOTE = "0x0000000000000000000000000000000000000000"
 POINT = ("token_detail", "latest_bids", "user_statistics", "collectibles_by_wallet")
 SCAN = ("marketplace", "collections_list", "search_marketplace", "transactions")
 ENDPOINTS = POINT + SCAN
+WARM_ROUNDS = 1  # silver rounds after the reference round: checked, not timed
 
 
 def measured_rounds(seconds: int) -> int:
     """A fixed round count for a run of ``seconds`` (a warm round takes
-    about 6-8 s on 4 cores), at least two."""
-    return max(2, round(seconds / 10))
+    about 5-8 s on 4 cores), at least three."""
+    return max(3, round(seconds / 7))
 
 
 def _wallets(ix: np.ndarray) -> list:
@@ -237,7 +240,7 @@ def run(ctx: harness.Context) -> harness.Result:
     svc = PasarQueryService.from_lake(spark, frames["tokens"], frames["orders"], **dims)
     ctx.mark("silver")
     n_rounds = measured_rounds(ctx.seconds)
-    plan = call_plan(frames["_gen"], ctx.seed, n_rounds)
+    plan = call_plan(frames["_gen"], ctx.seed, WARM_ROUNDS + n_rounds)
     sc = spark.sparkContext
 
     def call(endpoint: str, args: tuple, i: int):
@@ -254,12 +257,15 @@ def run(ctx: harness.Context) -> harness.Result:
                 rec["attrs"].update(harness.plan_phases_ms(df))
         return rows, elapsed
 
-    # set-up: the reference round, which is also the warm-up
+    # set-up: the reference round, then the warm rounds over the silver
     expected = reference(PasarQueryService(frames["tokens"], frames["orders"], **dims), plan[0])
-    ctx.begin_measuring()
-    times, results, failed_calls = defaultdict(list), [], 0
+    ctx.mark("reference_round")
+    times, warm, results, failed_calls = defaultdict(list), defaultdict(list), [], 0
     i = 0
-    for rnd in plan:
+    for r, rnd in enumerate(plan):
+        if r == WARM_ROUNDS:
+            ctx.begin_measuring()
+            first_measured = i
         for endpoint, args in rnd:
             try:
                 rows, elapsed = call(endpoint, args, i)
@@ -267,11 +273,11 @@ def run(ctx: harness.Context) -> harness.Result:
                 print(f"e2ebench: {endpoint}{args} failed: {exc!r}")
                 failed_calls += 1
             else:
-                times[endpoint].append(elapsed)
+                (times if r >= WARM_ROUNDS else warm)[endpoint].append(elapsed)
                 results.append((endpoint, args, rows))
             i += 1
     measure_end = time.time()
-    engine = _engine_per_call(spark, i, n_rounds) if tracer.enabled else {}
+    engine = _engine_per_call(spark, range(first_measured, i), n_rounds) if tracer.enabled else {}
     mismatched = check_calls(expected, results)
 
     all_ms = [x for v in times.values() for x in v]
@@ -285,11 +291,11 @@ def run(ctx: harness.Context) -> harness.Result:
         failed=failed_calls + mismatched,
         correct=failed_calls == 0 and mismatched == 0,
         inputs={
-            "wallets": N_WALLETS, "measured_rounds": n_rounds,
+            "wallets": N_WALLETS, "warm_rounds": WARM_ROUNDS, "measured_rounds": n_rounds,
             **{k: len(next(iter(v.values()))) for k, v in frames["_gen"].items() if isinstance(v, dict)},
         },
         samples={"calls": len(all_ms), **{f"{e}_calls": len(times[e]) for e in ENDPOINTS}},
-        series={"call_ms": dict(times)},
+        series={"call_ms": dict(times), "warm_call_ms": dict(warm)},
         checks={"calls_equal_plain_frames": {"ok": mismatched == 0, "mismatched_calls": mismatched,
                                              "distinct_calls": len(expected)}},
     )
@@ -313,15 +319,15 @@ def run(ctx: harness.Context) -> harness.Result:
     return res
 
 
-def _engine_per_call(spark, n_calls: int, n_rounds: int) -> dict:
+def _engine_per_call(spark, calls: range, n_rounds: int) -> dict:
     jobs = set()
-    for i in range(n_calls):
+    for i in calls:
         jobs |= harness.job_ids(spark, f"call-{i}")
     counts = harness.job_counts(spark, jobs)
     moved = harness.stage_bytes(spark, counts["stage_ids"])
     return {
-        "engine.jobs_per_call": counts["jobs"] / n_calls,
-        "engine.tasks_per_call": counts["tasks"] / n_calls,
+        "engine.jobs_per_call": counts["jobs"] / len(calls),
+        "engine.tasks_per_call": counts["tasks"] / len(calls),
         "engine.shuffle_write_bytes_per_round": moved["shuffle_write_bytes"] / n_rounds,
         "engine.spill_bytes_per_round": moved["spill_bytes"] / n_rounds,
     }

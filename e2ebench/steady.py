@@ -49,10 +49,11 @@ def run_once(tree: str, workload: str, seed: int, seconds: int, trace: int) -> d
     out["wall_s"] = time.time() - t0
     rec = newest_record(tree, workload, seed, trace)
     out["steal"] = rec.get("cpu_steal_share_measured") if rec else None
+    speed = [round(x) for x in rec.get("host_speed_ms", [])] if rec else None
     brief = {k: round(v["value"], 4) for k, v in out["metrics"].items()} if not trace else ""
     print(f"  {os.path.basename(os.path.abspath(tree))} {workload} seed {seed} trace {trace}: "
           f"correct={out['correct']} failed={out['failed']}/{out['attempted']} wall={out['wall_s']:.1f}s "
-          f"steal={out['steal'] and round(out['steal'], 3)} {brief}", flush=True)
+          f"steal={out['steal'] and round(out['steal'], 3)} host_ms={speed} {brief}", flush=True)
     return out
 
 

@@ -24,6 +24,7 @@ def main(argv: list[str]) -> int:
     workload, seed, seconds, trace, scratch, result_path, started = argv
     seed, seconds, trace, started = int(seed), int(seconds), bool(int(trace)), float(started)
     steal0 = harness.cpu_times()
+    speed0 = harness.host_speed_ms()
     from pasardassist_spark import get_spark
 
     spark = get_spark(f"e2ebench-{workload}")
@@ -35,6 +36,7 @@ def main(argv: list[str]) -> int:
         engine = harness.engine_info(spark)
     finally:
         spark.stop()
+    speed1 = harness.host_speed_ms()
     res.e2e["setup_s"] = ctx.measure_start - started
     res.named["setup_s"] = res.e2e["setup_s"]
     digest = harness.source_digest()
@@ -51,6 +53,8 @@ def main(argv: list[str]) -> int:
         "engine": engine,
         "cpu_steal_share": harness.steal_share(steal0, harness.cpu_times()),
         "cpu_steal_share_measured": steal_measured,
+        # before the session starts and after it stops
+        "host_speed_ms": [speed0, speed1],
         "setup_phases_s": ctx.phases,
         **asdict(res),
     }
@@ -63,7 +67,7 @@ def main(argv: list[str]) -> int:
         )
         record["spans"] = ctx.tracer.spans
     path = harness.write_record(RECORDS, record)
-    summary = {k: record[k] for k in ("named", "samples", "checks", "cpu_steal_share_measured")}
+    summary = {k: record[k] for k in ("named", "samples", "checks", "cpu_steal_share_measured", "host_speed_ms")}
     if trace:
         summary["tracing_overhead"] = record["tracing_overhead"]
     print(f"e2ebench: record {path}\n{json.dumps(summary, default=str)}", file=sys.stderr)
